@@ -1,18 +1,15 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship query at sf0.001; ``queries()`` maps every
-implemented SURVEY.md §2B operator id to a ``(spark, sf_dir) -> DataFrame``;
-``oracle_sql()`` gives the DuckDB-equivalent SQL for hash-match verification.
+implemented SURVEY.md §2B operator id to a ``(spark, sf_dir) -> DataFrame``,
+in registry order; ``oracle_sql()`` gives the DuckDB-equivalent SQL for
+hash-match verification.
 Operator implementations live in ``iot_data_pipeline_spark``; this module is
 pure registry.
 """
 
 from __future__ import annotations
 
-import glob
-import hashlib
-import inspect
-import json
 import os
 import sys
 from collections.abc import Callable
@@ -61,179 +58,13 @@ _MODULES = [
 ]
 
 
-# NOTE: no set/frozenset here — their repr is PYTHONHASHSEED-ordered, which
-# would make the fingerprint process-dependent (review finding, round 8).
-_SIMPLE_CONST_TYPES = (int, float, str, bytes, bool, tuple, list, dict)
-
-
-def _code_names(code) -> set[str]:
-    """All global names a code object references, INCLUDING inside nested
-    code objects (comprehensions, lambdas, inner functions live as child
-    code objects in co_consts and keep their own co_names — the outer
-    co_names alone misses e.g. a module constant read only inside a list
-    comprehension, which is the dominant shape in pandas-UDF operators;
-    review finding, round 8)."""
-    import types
-
-    names: set[str] = set(code.co_names)
-    for const in code.co_consts:
-        if isinstance(const, types.CodeType):
-            names |= _code_names(const)
-    return names
-
-
-# Fingerprints are memoized per callable: queries() recomputes the ordering on
-# every invocation and the transitive inspect.getsource walk over ~hundreds of
-# ids is otherwise repeated re-parsing at driver startup (r8 ADVICE item 2).
-# Keyed on the function object itself (registry callables are module-level and
-# live for the process). The memo's premise — "source cannot change within a
-# process" — holds only for the short-lived driver/attest processes this entry
-# serves: inspect.getsource re-reads files via linecache, so a LONG-lived
-# process spanning on-disk edits (or a test harness that reloads modules)
-# could otherwise serve stale fingerprints and mask a rework (r9 ADVICE).
-# Long-lived callers must call clear_fingerprint_cache() after any edit;
-# tools_attest.py runs one process per invocation, so it never needs to.
-_FP_CACHE: dict[Callable, str] = {}
-
-
-def clear_fingerprint_cache() -> None:
-    """Drop the fingerprint memo AND linecache's copies of the source files,
-    so the next src_fingerprint() walk re-reads current on-disk source. For
-    long-lived processes that edit source mid-flight; no-op cost otherwise."""
-    import linecache
-
-    _FP_CACHE.clear()
-    linecache.clearcache()
-
-
-def src_fingerprint(fn: Callable) -> str:
-    """Stable sha1 over the registered callable's source PLUS the sources of
-    every same-module function it (transitively) references and the reprs of
-    the simple module-level constants it reads (caps, schedules, seeds).
-    Name discovery walks nested code objects too (``_code_names``), so a
-    constant read only inside a comprehension or an inner pandas-UDF body
-    still flips the fingerprint when it changes.
-
-    This is the rework detector for attestation ordering: a driver-green row
-    only attests the code that produced it, so when an operator's
-    implementation changes, its fingerprint changes and the id re-enters the
-    never-attested group (see ``_attestation_round``). One-module-deep by
-    design — cross-module helpers are shared infrastructure whose reworks get
-    their own ids re-attested via their own callers' fingerprints."""
-    cached = _FP_CACHE.get(fn)
-    if cached is not None:
-        return cached
-    parts: list[str] = []
-    seen_fns: set[int] = set()
-    seen_names: set[str] = set()
-    stack = [fn]
-    mod = sys.modules.get(getattr(fn, "__module__", "") or "")
-    while stack:
-        f = stack.pop()
-        if id(f) in seen_fns:
-            continue
-        seen_fns.add(id(f))
-        try:
-            parts.append(inspect.getsource(f))
-        except (OSError, TypeError):
-            parts.append(repr(getattr(f, "__qualname__", f)))
-            continue
-        code = getattr(f, "__code__", None)
-        if code is None or mod is None:
-            continue
-        for name in sorted(_code_names(code)):
-            if name in seen_names:
-                continue
-            seen_names.add(name)
-            obj = getattr(mod, name, None)
-            if obj is None:
-                continue
-            if inspect.isfunction(obj) and obj.__module__ == fn.__module__:
-                stack.append(obj)
-            elif isinstance(obj, _SIMPLE_CONST_TYPES):
-                parts.append(f"{name}={obj!r}")
-    fp = hashlib.sha1("\n".join(sorted(parts)).encode("utf-8")).hexdigest()
-    _FP_CACHE[fn] = fp
-    return fp
-
-
-def latest_attested_round() -> dict[str, int]:
-    """Latest round in which each query id earned a driver-verified row in
-    CORRECTNESS_r*.json (hash-green, or ran under the declared rows-only
-    check)."""
-    latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json"))):
-        try:
-            rnd = int(os.path.basename(path)[len("CORRECTNESS_r") : -len(".json")])
-        except ValueError:
-            continue
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for qid, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            hash_green = row.get("hash_match") and row.get("rows_match")
-            rows_only_ran = (
-                row.get("err") == "no_oracle" and row.get("spark_rows") is not None
-            )
-            if hash_green or rows_only_ran:
-                latest[qid] = max(rnd, latest.get(qid, 0))
-    return latest
-
-
-def _attestation_round(
-    registry: dict[str, Callable[[SparkSession, str], DataFrame]],
-) -> dict[str, int]:
-    """Effective attestation round per id, REWORK-AWARE: the sidecar
-    ATTESTATIONS.json (regenerated each round by tools_attest.py) records,
-    alongside each id's latest driver-green round, the ``src_fingerprint`` of
-    the implementing callable as of that attestation. An id whose current
-    fingerprint no longer matches orders as round 0 (never attested) so the
-    driver's 50-id prefix re-touches reworked code immediately instead of
-    resting on a row earned by a previous implementation.
-
-    Falls back to round-only ordering (no rework detection) when the sidecar
-    is absent or unreadable — the driver contract must never break on a
-    missing artifact."""
-    latest = latest_attested_round()
-    sidecar_path = os.path.join(_REPO_ROOT, "ATTESTATIONS.json")
-    try:
-        with open(sidecar_path) as fh:
-            sidecar = json.load(fh)
-    except (OSError, ValueError):
-        return latest
-    effective: dict[str, int] = {}
-    for qid, fn in registry.items():
-        entry = sidecar.get(qid)
-        rnd = latest.get(qid, 0)
-        if not rnd or not isinstance(entry, dict):
-            continue
-        try:
-            current_fp = src_fingerprint(fn)
-        except Exception:
-            effective[qid] = rnd  # never let fingerprinting break the driver
-            continue
-        if entry.get("fp") == current_fp:
-            effective[qid] = rnd
-        # else: code changed since the attested round -> stays at round 0
-    return effective
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2B/§2C, ordered
-    stalest-driver-attestation first (see ``_attestation_round``); ties
-    keep registry insertion order so results are stable within a round."""
+    """One entry per implemented operator from SURVEY.md §2B/§2C, in
+    registry order: each module's ``QUERIES`` in ``_MODULES`` order."""
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _MODULES:
         merged.update(mod.QUERIES)
-    rounds = _attestation_round(merged)
-    order = sorted(
-        enumerate(merged.items()), key=lambda t: (rounds.get(t[1][0], 0), t[0])
-    )
-    return {k: v for _, (k, v) in order}
+    return merged
 
 
 def oracle_sql() -> dict[str, str]:

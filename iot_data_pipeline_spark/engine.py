@@ -20,12 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from iot_data_pipeline_spark.functions.transforms import (
-    normalize_columns,
-    transform_iot,
-)
+from iot_data_pipeline_spark.pipeline import process
 from iot_data_pipeline_spark.session import build_session, prepare
-from iot_data_pipeline_spark.sources.readers import TABLES, load_table, read_iot_csv
+from iot_data_pipeline_spark.sources.readers import TABLES, load_table
 from iot_data_pipeline_spark.sources.sinks import write_parquet
 
 
@@ -50,7 +47,7 @@ class Engine:
     ) -> DataFrame:
         """Schema-enforced CSV scan → normalize → quirk transforms →
         overwrite parquet; returns the transformed frame (lazy)."""
-        df = transform_iot(normalize_columns(read_iot_csv(self.spark, input_path)))
+        df = process(self.spark, input_path)
         write_parquet(df, output_path, sort_within_partitions=sort_by)
         return df
 

@@ -31,6 +31,7 @@ from pyspark.sql.window import Window
 from iot_data_pipeline_spark import cache_tracker
 from iot_data_pipeline_spark.cache_tracker import tracked_cache
 from iot_data_pipeline_spark.operators._util import spread_input, table
+from iot_data_pipeline_spark.session import scoped_conf
 
 log = logging.getLogger(__name__)
 
@@ -3406,21 +3407,19 @@ def _bpe_learn_from(
     n_vocab = last_ckpt.count()
     batch_sizes: list[int] = []
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    loop_parts = max(1, (n_vocab + _BPE_LOOP_PART_ROWS - 1) // _BPE_LOOP_PART_ROWS)
     try:
-        loop_parts = max(1, (n_vocab + _BPE_LOOP_PART_ROWS - 1) // _BPE_LOOP_PART_ROWS)
-        try:
-            loop_parts = min(loop_parts, max(1, int(prev_parts)))
-        except ValueError:
-            pass  # non-integer ambient value (e.g. "auto"): keep derived
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        loop_parts = min(loop_parts, max(1, int(prev_parts)))
+    except ValueError:
+        pass  # non-integer ambient value (e.g. "auto"): keep derived
+    confs = {
+        "spark.sql.shuffle.partitions": str(loop_parts),
+        "spark.sql.adaptive.enabled": "false",
+    }
+    with scoped_conf(spark, confs):
         return _bpe_learn_rounds(
             last_ckpt, merges, stats, batch_sizes=batch_sizes
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
 
 # Vocabulary rows per loop-shuffle partition: the BPE pair table is

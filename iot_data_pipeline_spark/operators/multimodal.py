@@ -761,7 +761,12 @@ def _spread(df: DataFrame) -> DataFrame:
     defaultParallelism partitions passes through untouched — a
     production-scale scan with thousands of splits must not be coalesced
     down to core count (that would trade task granularity for one
-    exchange and lose straggler/retry resilience)."""
+    exchange and lose straggler/retry resilience).
+
+    Partitioning is best-effort: only the repartition path places rows by
+    ``media_id``. On the pass-through path rows keep the input's
+    partitioning, so rows of one ``media_id`` are not guaranteed to share a
+    partition; nothing downstream may rely on that co-location."""
     sc = df.sparkSession.sparkContext
     p = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= p:

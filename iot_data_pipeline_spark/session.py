@@ -15,7 +15,8 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
-from typing import Any, Mapping
+from contextlib import contextmanager
+from typing import Any, Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
@@ -146,3 +147,18 @@ def prepare(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.parquet.compression.codec", "zstd")
     _ship_package_to_workers(spark)
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the body of the ``with`` block, then
+    restore each key's prior value, also when the body raises. Keys are set
+    and restored in ``confs`` order."""
+    prev = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)

@@ -2997,9 +2997,18 @@ def merge(
         source = source.select(
             *[F.col(c).alias(cm.get(c, c)) for c in source.columns]
         )
+    # prev_max: the running max of max_key over the files before this one
+    # in (min_key, path) order. A key inside k overlapping files joins k
+    # stats rows; only the first of them has no earlier file covering the
+    # key (every earlier file starts at or below it), so __nk counts each
+    # source key once without a distinct-count job.
+    stat_rows, prev_max = [], None
+    for f in sorted(live, key=lambda f: (f["min_key"], f["path"])):
+        stat_rows.append((f["path"], f["min_key"], f["max_key"], prev_max))
+        if prev_max is None or f["max_key"] > prev_max:
+            prev_max = f["max_key"]
     stats = spark.createDataFrame(
-        [(f["path"], f["min_key"], f["max_key"]) for f in live],
-        "path STRING, min_key LONG, max_key LONG",
+        stat_rows, "path STRING, min_key LONG, max_key LONG, prev_max LONG"
     )
     # Delta/Iceberg MERGE raise when a target row matches multiple source
     # rows; without this guard the full_outer join below fans out and the
@@ -3016,8 +3025,8 @@ def merge(
     # the same driver footprint the old collect had). Semantics
     # unchanged: same rejection condition, same hit-file set.
     # the key is ALIASED to __k so a table whose merge key is literally
-    # named 'path'/'min_key'/'max_key' can't collide with the stats frame
-    # (ADVICE r16); the same summary job also returns the source key
+    # named 'path'/'min_key'/'max_key'/'prev_max' can't collide with the
+    # stats frame (ADVICE r16); the same summary job also returns the source key
     # envelope (__kmin/__kmax/__nk) that seeds the manifest-derived range
     # bounds below — one job answers the dup guard, the file prune AND
     # the write layout.
@@ -3037,7 +3046,14 @@ def merge(
         F.collect_set("path").alias("__paths"),
         F.min("__k").alias("__kmin"),
         F.max("__k").alias("__kmax"),
-        F.count("__k").alias("__nk"),
+        F.count(
+            F.when(
+                F.col("path").isNull()
+                | F.col("prev_max").isNull()
+                | (F.col("__k") > F.col("prev_max")),
+                F.col("__k"),
+            )
+        ).alias("__nk"),
     ).first()
     worst = summary["__dup"]
     if worst is not None and worst["__c"] > 1:

@@ -20,6 +20,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from iot_data_pipeline_spark.session import scoped_conf
+
 # The reference's enforced input schema, 1:1
 # (/root/reference/src/jobs/process_iot_data.py:79-104). Column names keep the
 # raw dots/hyphens; normalize_columns() rewrites them after the scan.
@@ -121,17 +123,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "spark.sql.legacy.parquet.nanosAsLong": "true",
             "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
         }
-        prev = {k: spark.conf.get(k) for k in confs}
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        try:
+        with scoped_conf(spark, confs):
             # .read.parquet resolves the schema eagerly, which is the only
             # point these confs are consulted (verified value-identical
             # with the confs restored before any action runs).
             df = spark.read.parquet(path)
-        finally:
-            for k, v in prev.items():
-                spark.conf.set(k, v)
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):
             # legacy TIMESTAMP(NANOS) generation: raw nanos → µs instant

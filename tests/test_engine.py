@@ -156,162 +156,15 @@ def test_all_registry_oracles_use_portable_result_types(sf_dir):
     assert bad == [], bad
 
 
-def _load_entry_mod(tmp_root=None):
-    import importlib.util
-    import os
+def test_queries_is_registry_order_merge():
+    """``queries()`` is the plain concatenation of each module's ``QUERIES``
+    in ``_MODULES`` order, with the same callables, and reads no sidecar."""
+    import __spark_entry__ as em
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "_entry_attest", os.path.join(root, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    if tmp_root is not None:
-        mod._REPO_ROOT = str(tmp_root)
-    return mod
-
-
-def test_src_fingerprint_tracks_helpers_and_constants(tmp_path):
-    """The rework detector must see one-module-deep: a change to a helper
-    the registered callable delegates to, or to a module constant it reads
-    (caps, schedules), must change the fingerprint even when the registered
-    function's own text is untouched."""
-    import importlib.util
-    import sys
-
-    entry = _load_entry_mod()
-
-    def write_mod(name, cap, helper_body):
-        p = tmp_path / f"{name}.py"
-        p.write_text(
-            f"_CAP = {cap}\n"
-            f"def _helper(x):\n    return {helper_body}\n"
-            "def op(x):\n    return _helper(x) + _CAP\n"
-        )
-        spec = importlib.util.spec_from_file_location(name, p)
-        mod = importlib.util.module_from_spec(spec)
-        sys.modules[name] = mod
-        spec.loader.exec_module(mod)
-        return mod
-
-    base = entry.src_fingerprint(write_mod("_fp_a", 7, "x * 2").op)
-    same = entry.src_fingerprint(write_mod("_fp_b", 7, "x * 2").op)
-    const_changed = entry.src_fingerprint(write_mod("_fp_c", 8, "x * 2").op)
-    helper_changed = entry.src_fingerprint(write_mod("_fp_d", 7, "x * 3").op)
-    for name in ("_fp_a", "_fp_b", "_fp_c", "_fp_d"):
-        sys.modules.pop(name, None)
-    assert base == same  # deterministic across equal-source modules
-    assert const_changed != base  # constant edits detected
-    assert helper_changed != base  # delegated-helper edits detected
-
-
-def test_attestation_is_rework_aware(tmp_path):
-    """An id whose implementing code changed since its last driver-green row
-    must order as never-attested (ahead of every attested id), while an id
-    whose stamped fingerprint still matches keeps its round."""
-    import json
-
-    mod = _load_entry_mod(tmp_path)
-    registry = {}
-    for m in mod._MODULES:
-        registry.update(m.QUERIES)
-    fresh_id, stale_id = "scan_parquet", "filter_pred"
-    rows = {
-        qid: {"rows_match": True, "schema_match": True, "hash_match": True,
-              "spark_rows": 1, "oracle_rows": 1, "err": None}
-        for qid in (fresh_id, stale_id)
-    }
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps(rows))
-    sidecar = {
-        fresh_id: {"round": 1, "fp": mod.src_fingerprint(registry[fresh_id])},
-        stale_id: {"round": 1, "fp": "stale:reworked"},
-    }
-    (tmp_path / "ATTESTATIONS.json").write_text(json.dumps(sidecar))
-
-    effective = mod._attestation_round(registry)
-    assert effective.get(fresh_id) == 1
-    assert stale_id not in effective  # mismatch -> treated as never attested
-
-    ids = list(mod.queries())
-    assert ids.index(stale_id) < ids.index(fresh_id)
-
-    # Sidecar absent -> graceful round-only fallback, driver never breaks.
-    (tmp_path / "ATTESTATIONS.json").unlink()
-    fallback = mod._attestation_round(registry)
-    assert fallback.get(stale_id) == 1 and fallback.get(fresh_id) == 1
-
-
-def test_attest_regen_keeps_prior_stamp_at_max_round():
-    """A second regen later in the round must NOT re-stamp the current
-    fingerprint over a prior entry for the same (just-landed) round: the
-    driver earned that row against pre-edit code, and restamping post-edit
-    fingerprints would silently certify reworked code (r8 ADVICE item 1)."""
-    import importlib.util
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "_tools_attest", os.path.join(root, "tools_attest.py")
-    )
-    ta = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(ta)
-
-    registry = {"a": lambda: None, "b": lambda: None, "c": lambda: None}
-    latest = {"a": 2, "b": 2, "c": 1}
-    existing = {
-        "a": {"round": 2, "fp": "fp-earned-pre-edit"},  # maxr, prior stamp
-        "c": {"round": 1, "fp": "fp-old-round"},
-    }
-    calls = []
-
-    def fingerprint(fn):
-        calls.append(fn)
-        return "fp-current-head"
-
-    sidecar, stamped, kept, overridden = ta.regenerate(
-        registry, latest, existing, set(), fingerprint
-    )
-    # a: prior same-round entry KEPT verbatim, fingerprint() never called on it
-    assert sidecar["a"] == {"round": 2, "fp": "fp-earned-pre-edit"}
-    # b: first stamp for the just-landed round -> current fp is faithful
-    assert sidecar["b"] == {"round": 2, "fp": "fp-current-head"}
-    # c: old round with matching prior -> kept
-    assert sidecar["c"] == {"round": 1, "fp": "fp-old-round"}
-    assert (stamped, kept, overridden) == (1, 2, 0)
-    assert calls == [registry["b"]]
-
-    # Old round WITHOUT a matching prior -> conservative stale sentinel
-    # (maxr pinned to 2 by id "b" so "c"'s round 1 is genuinely old).
-    sidecar2, _, _, over2 = ta.regenerate(
-        {"b": registry["b"], "c": registry["c"]},
-        {"b": 2, "c": 1},
-        {},
-        set(),
-        fingerprint,
-    )
-    assert sidecar2["c"]["fp"].startswith("stale:unstamped")
-    assert over2 == 1
-
-
-def test_src_fingerprint_is_memoized():
-    """queries() recomputes ordering per invocation; the transitive
-    getsource walk must run once per callable per process (r8 ADVICE)."""
-    mod = _load_entry_mod()
-    registry = {}
-    for m in mod._MODULES:
-        registry.update(m.QUERIES)
-    fn = registry["scan_parquet"]
-    first = mod.src_fingerprint(fn)
-    assert mod._FP_CACHE[fn] == first
-    # Poison the cache: a second call must hit it, not recompute.
-    mod._FP_CACHE[fn] = "cached-sentinel"
-    assert mod.src_fingerprint(fn) == "cached-sentinel"
-    # The escape hatch for long-lived processes spanning on-disk edits
-    # (r9 ADVICE): clearing drops the memo so the next call recomputes
-    # the real fingerprint from current source.
-    mod.clear_fingerprint_cache()
-    assert fn not in mod._FP_CACHE
-    assert mod.src_fingerprint(fn) == first
+    expected = [(k, fn) for mod in em._MODULES for k, fn in mod.QUERIES.items()]
+    got = list(em.queries().items())
+    assert [k for k, _ in got] == [k for k, _ in expected]
+    assert all(a is b for (_, a), (_, b) in zip(got, expected))
 
 
 def test_bench_band_check_is_mechanical():

@@ -125,6 +125,37 @@ def test_merge_duplicate_source_key_still_rejected(spark, tmp_path):
         acid_table.merge(spark, dup, p)
 
 
+def test_merge_source_weight_counts_each_key_once(spark, tmp_path, monkeypatch):
+    """A source key inside several overlapping file ranges must weigh once
+    in the layout's source segment, not once per file it falls in."""
+    from iot_data_pipeline_spark.sources import acid_table
+
+    p = str(tmp_path / "t4")
+
+    def rows(lo, hi, step=1):
+        return spark.range(lo, hi, step).select(
+            F.col("id").alias("k"), F.col("id").alias("v")
+        )
+
+    # two files over [0, 1998] and [1, 1999], a third over [5000, 5009]
+    acid_table.create(rows(0, 2000, 2), p, "k", n_files=1)
+    acid_table.append(rows(1, 2000, 2), p, n_files=1)
+    acid_table.append(rows(5000, 5010), p, n_files=1)
+    calls = []
+    real = acid_table._mixture_bounds
+
+    def spy(segments, n):
+        calls.append(list(segments))
+        return real(segments, n)
+
+    monkeypatch.setattr(acid_table, "_mixture_bounds", spy)
+    # 1000 keys in both overlapping files, 5 in the disjoint one, 7 in none
+    keys = [*range(500, 1500), *range(5000, 5005), *range(9000, 9007)]
+    src = spark.createDataFrame([(k, -1) for k in keys], "k BIGINT, v BIGINT")
+    acid_table.merge(spark, src, p, n_files=4)
+    assert calls and calls[0][-1] == (500, 9006, len(keys))
+
+
 def test_kmeans_codebook_memo_clear():
     from iot_data_pipeline_spark.operators import llm
 

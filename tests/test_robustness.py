@@ -280,3 +280,21 @@ def test_registry_self_pins_ansi_semantics(spark, sf_dir, qname):
         spark.conf.set("spark.sql.ansi.enabled", "true")
         spark.catalog.clearCache()
     assert hostile == base
+
+
+def test_scoped_conf_restores_on_exit_and_on_error(spark):
+    """``session.scoped_conf`` sets its confs for the block only and puts
+    the prior values back whether the block returns or raises."""
+    from iot_data_pipeline_spark.session import scoped_conf
+
+    key_a, key_b = "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"
+    before = {k: spark.conf.get(k) for k in (key_a, key_b)}
+    confs = {key_a: "7", key_b: "false"}
+    with scoped_conf(spark, confs):
+        assert {k: spark.conf.get(k) for k in confs} == confs
+    assert {k: spark.conf.get(k) for k in confs} == before
+    with pytest.raises(RuntimeError, match="body failed"):
+        with scoped_conf(spark, confs):
+            assert spark.conf.get(key_a) == "7"
+            raise RuntimeError("body failed")
+    assert {k: spark.conf.get(k) for k in confs} == before

@@ -1,9 +1,12 @@
-"""Round-16 optimization profiler: per-query plan dump + timed noop reps.
+"""Query profiler: per-query plan dump + timed noop reps.
 
 Usage::
 
-    python tools_profile_r16.py plan  <suffix> [query ...]   # dump explain("formatted") to plans/r16/<q>_<suffix>.txt
-    python tools_profile_r16.py time  <reps>   [query ...]   # best/median of N noop-sink reps, bench-identical session
+    python tools_profile.py plan <suffix> [query ...]
+    python tools_profile.py time <reps>   [query ...]
+
+``plan`` writes each query's explain("formatted") to
+plans/profile/<q>_<suffix>.txt; ``time`` prints the best of N noop-sink reps.
 
 Bench-identical session: local[$SPARK_GRAFT_CPUS], shuffle.partitions=cpus,
 AQE on, UTC, 16g driver — so numbers here are comparable to bench.py.
@@ -26,7 +29,7 @@ def _session():
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
-        .appName("r16-profile")
+        .appName("query-profile")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
@@ -46,17 +49,21 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
     from iot_data_pipeline_spark.cache_tracker import evict_tracked
-    from iot_data_pipeline_spark.operators.llm import clear_bpe_rules_memo
+    from iot_data_pipeline_spark.operators.llm import (
+        clear_bpe_rules_memo,
+        clear_kmeans_codebook_memo,
+    )
 
     spark = _session()
     qs = entrymod.queries()
 
     if mode == "plan":
-        out_dir = os.path.join(_REPO_ROOT, "plans", "r16")
+        out_dir = os.path.join(_REPO_ROOT, "plans", "profile")
         os.makedirs(out_dir, exist_ok=True)
         for name in names:
             evict_tracked()
             clear_bpe_rules_memo()
+            clear_kmeans_codebook_memo()
             df = qs[name](spark, sf_dir)
             txt = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
@@ -82,6 +89,7 @@ def main() -> None:
             for _ in range(reps):
                 evict_tracked()
                 clear_bpe_rules_memo()
+                clear_kmeans_codebook_memo()
                 t0 = time.time()
                 df = qs[name](spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
