@@ -167,6 +167,42 @@ def test_queries_is_registry_order_merge():
     assert all(a is b for (_, a), (_, b) in zip(got, expected))
 
 
+def test_queries_opens_no_file(monkeypatch):
+    """Building the registry is pure in-memory work: ``queries()`` opens no
+    file (no CORRECTNESS records, no sidecar) however often it is called."""
+    import builtins
+
+    import __spark_entry__ as em
+
+    opened = []
+    real_open = builtins.open
+
+    def spy(file, *args, **kwargs):
+        opened.append(file)
+        return real_open(file, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", spy)
+    for _ in range(2):
+        assert em.queries()
+    assert opened == []
+
+
+def test_ingest_csv_writes_pipeline_process_rows(spark, tmp_path):
+    """``Engine.ingest_csv`` returns and writes exactly the frame the batch
+    pipeline's ``process`` builds from the same CSV."""
+    from iot_data_pipeline_spark.pipeline import process
+
+    src = _write_csv_fixture()
+    out = str(tmp_path / "etl_out")
+    df = Engine(spark).ingest_csv(src, out)
+    expected = process(spark, src)
+    assert df.schema == expected.schema
+    assert sorted(df.collect()) == sorted(expected.collect())
+    written = spark.read.parquet(out)
+    assert written.columns == expected.columns
+    assert sorted(written.collect()) == sorted(expected.collect())
+
+
 def test_bench_band_check_is_mechanical():
     """BENCH_BANDS.json + bench._band_check form the mechanical per-query
     regression gate (r9 verdict item 6): >ref*1.5+0.3 s trips, quiet jitter
